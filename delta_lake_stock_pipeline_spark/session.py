@@ -11,6 +11,16 @@ with scale-oriented defaults:
 * ``spark.sql.shuffle.partitions`` sized for the local fixture scale; on a
   real cluster AQE coalesces from a high initial number, so we set the
   initial partition count rather than hand-scheduling per query.
+* Partition discovery lists on the driver on a local master
+  (``spark.sql.sources.parallelPartitionDiscovery.threshold`` raised):
+  above 32 paths Spark otherwise runs a "parallel" listing job whose
+  tasks share the driver's JVM, adding only scheduling cost. Opening a
+  128-partition table after one 8-partition MERGE (120 paths, 4-core
+  host, warm median of 5): 1 job and 1.67 s at the default threshold
+  with the manifest-declared schema (``storage/table.py``), 0 jobs and
+  0.19 s raised; inferring footers as well took 3 jobs and 2.05 s. The
+  same threshold governs ``MSCK REPAIR TABLE`` and catalog partition
+  listing.
 * Delta Lake extensions are attached only when delta-spark is importable
   (it is optional in this environment); everything else degrades to parquet.
 """
@@ -107,6 +117,10 @@ def get_spark(
         .config("spark.local.dir", os.path.join(scratch, "spark-local"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000"
+        )
     if _HAVE_DELTA:
         builder = builder.config(
             "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"

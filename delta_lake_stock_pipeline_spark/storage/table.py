@@ -3,8 +3,16 @@
 Re-expresses the reference's Delta lifecycle on plain parquet (SURVEY.md
 §7.4 risk 2 fallback): each write lands an immutable version directory
 ``v0000, v0001, ...`` under the table path and appends one JSONL manifest
-entry ``{version, timestamp, operation, operationMetrics}`` -- the shape
-``DeltaTable.history()`` exposes (``maintenance.py:87-91``).
+entry ``{version, timestamp, operation, operationMetrics, snapshot,
+schema}`` -- the shape ``DeltaTable.history()`` exposes
+(``maintenance.py:87-91``).
+
+The manifest is the only thing a read consults, as Delta readers take a
+snapshot from the log rather than the file system: ``snapshot`` names the
+partition dirs and ``schema`` is the written frame's schema JSON (Delta's
+``metaData.schemaString``). Opening a snapshot therefore plans without
+Spark jobs -- no footer-inference job per version dir. Entries without a
+schema (older manifests, clones) fall back to footer inference.
 
 Isolation model: readers resolve a version directory once and only ever see
 its immutable files; writers only add new directories. That is the essential
@@ -125,6 +133,9 @@ def write_partitioned(
     """Write a new table version partitioned by ``partition_cols`` (S4/S5,
     ``stock_harvester.py:170-181``) and log it. Returns the new version.
 
+    The manifest entry records ``df``'s schema, which later reads of this
+    version dir declare instead of inferring it from parquet footers.
+
     Row count is captured via ``observe`` so the write job itself produces
     the metric -- no second scan over the data (at 100 TB a metrics
     ``count()`` would double the job).
@@ -194,6 +205,7 @@ def write_partitioned(
             "operation": operation,
             "operationMetrics": metrics,
             "snapshot": snapshot,
+            "schema": df.schema.json(),
         },
     )
     return version
@@ -235,12 +247,11 @@ def read_table(
     manifest commit times) is time travel: old version dirs are immutable
     until VACUUM removes them.
 
-    Resolves the version's SNAPSHOT: after a pruned MERGE/DELETE the live
-    table is a union of partition dirs across version dirs (one read per
-    contributing version, each with its own ``basePath`` so partition
-    columns materialize; filters on partition columns still prune because
-    every listed path carries its partition values). Single-version
-    snapshots take the plain whole-dir scan."""
+    Resolves the version's SNAPSHOT from the manifest: after a pruned
+    MERGE/DELETE the live table is a union of partition dirs across version
+    dirs, one read per contributing version (see ``_read_rels``). Each read
+    declares the schema its commit recorded, so building the frame runs no
+    Spark job."""
     if timestamp is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp, not both")
@@ -262,26 +273,7 @@ def read_table(
         if os.path.isdir(carrier):
             return spark.read.option("basePath", carrier).parquet(carrier).limit(0)
         raise FileNotFoundError(f"no data in any version at {path}")
-    by_ver: dict[int, list[str]] = {}
-    for rel, sv in snap.items():
-        by_ver.setdefault(sv, []).append(rel)
-    if len(by_ver) == 1:
-        (sv, rels), = by_ver.items()
-        vdir = _version_dir(path, sv)
-        if set(rels) == set(_partition_rel_dirs(vdir)):
-            return spark.read.parquet(vdir)
-    parts = []
-    for sv, rels in sorted(by_ver.items()):
-        vdir = _version_dir(path, sv)
-        paths = [os.path.join(vdir, rel) if rel else vdir for rel in sorted(rels)]
-        parts.append(spark.read.option("basePath", vdir).parquet(*paths))
-    df = parts[0]
-    for p in parts[1:]:
-        # allowMissingColumns = schema evolution on read: a snapshot can mix
-        # versions written before/after an added column (Delta reads such
-        # tables the same way -- absent columns are NULL).
-        df = df.unionByName(p, allowMissingColumns=True)
-    return df
+    return _read_rels(spark, path, snap, set(snap))
 
 
 def restore(path: str, version: int) -> int:
@@ -337,22 +329,43 @@ def restore(path: str, version: int) -> int:
 def _read_rels(
     spark: SparkSession, path: str, snap: dict[str, int], rels: set[str]
 ) -> DataFrame | None:
-    """Scan only ``rels`` partitions of a snapshot (grouped per contributing
-    version dir so partition columns materialize via basePath). None when
-    the snapshot holds none of them."""
+    """Scan only ``rels`` partitions of a snapshot; None when the snapshot
+    holds none of them.
+
+    One read per contributing version dir, each with its own ``basePath``
+    (so partition columns materialize, and filters on them still prune
+    because every listed path carries its partition values) and with the
+    schema its writing commit recorded -- so an ``evolve_schema`` MERGE or
+    a RESTORE reads every dir with the columns it was written with, and no
+    footer is inferred. A version whose whole dir is wanted is read by its
+    root."""
+    from pyspark.sql.types import StructType
+
     by_ver: dict[int, list[str]] = {}
     for rel in rels:
         if rel in snap:
             by_ver.setdefault(snap[rel], []).append(rel)
     if not by_ver:
         return None
-    parts = []
+    entries = {e.get("version"): e for e in _read_manifest(path)}
+    frames = []
     for sv, vrels in sorted(by_ver.items()):
         vdir = _version_dir(path, sv)
-        paths = [os.path.join(vdir, rel) if rel else vdir for rel in sorted(vrels)]
-        parts.append(spark.read.option("basePath", vdir).parquet(*paths))
-    df = parts[0]
-    for p in parts[1:]:
+        entry = entries.get(sv, {})
+        reader = spark.read.option("basePath", vdir)
+        if "schema" in entry:
+            reader = reader.schema(StructType.fromJson(json.loads(entry["schema"])))
+        own = {rel for rel, v in entry.get("snapshot", {}).items() if int(v) == sv}
+        if set(vrels) == own:
+            paths = [vdir]
+        else:
+            paths = [os.path.join(vdir, rel) if rel else vdir for rel in sorted(vrels)]
+        frames.append(reader.parquet(*paths))
+    df = frames[0]
+    for p in frames[1:]:
+        # allowMissingColumns = schema evolution on read: a snapshot can mix
+        # versions written before/after an added column (Delta reads such
+        # tables the same way -- absent columns are NULL).
         df = df.unionByName(p, allowMissingColumns=True)
     return df
 
@@ -583,34 +596,54 @@ def write_with_expectations(
 
 def history(spark: SparkSession, path: str) -> DataFrame:
     """Manifest as a DataFrame -- version/timestamp/operation/metrics ordered
-    by version (M4, ``maintenance.py:87-91``)."""
-    entries = [
-        (
-            e["version"],
-            e["timestamp"],
-            e["operation"],
-            json.dumps(e.get("operationMetrics", {})),
+    by version (M4, ``maintenance.py:87-91``).
+
+    The rows travel as JVM literals (``range(1)`` + ``explode`` of struct
+    literals, as in ``operators/similarity.py``): a pickled-RDD
+    ``createDataFrame`` would fork Python workers on every action."""
+    from pyspark.sql import functions as F
+
+    def row(version, timestamp, operation, metrics):
+        return (
+            F.lit(version).cast("int").alias("version"),
+            F.lit(timestamp).cast("string").alias("timestamp"),
+            F.lit(operation).cast("string").alias("operation"),
+            F.lit(metrics).cast("string").alias("operationMetrics"),
         )
-        for e in _read_manifest(path)
+
+    entries = sorted(_read_manifest(path), key=lambda e: e["version"])
+    if not entries:  # same schema, zero rows
+        return spark.range(0).select(*row(0, "", "", ""))
+    structs = [
+        F.struct(
+            *row(
+                e["version"],
+                e["timestamp"],
+                e["operation"],
+                json.dumps(e.get("operationMetrics", {})),
+            )
+        )
+        for e in entries
     ]
-    return spark.createDataFrame(
-        entries, "version INT, timestamp STRING, operation STRING, operationMetrics STRING"
-    ).orderBy("version")
+    return (
+        spark.range(1, numPartitions=1)
+        .select(F.explode(F.array(*structs)).alias("s"))
+        .select("s.*")
+    )
 
 
 def _partition_pred(keys: list[dict]):
-    """OR-of-conjunctions predicate selecting the listed partition keys --
-    static, so Catalyst prunes non-matching partition dirs at planning."""
-    from functools import reduce
-
+    """``struct(<partition cols>) IN (<struct literals>)`` selecting the
+    listed partition keys -- one flat expression however many keys (an
+    OR chain of equalities overflows the analyzer's stack at a few hundred
+    partitions), and it references only partition columns, so Catalyst
+    still prunes non-matching partition dirs at planning."""
     from pyspark.sql import functions as F
 
-    def one(k: dict):
-        return reduce(
-            lambda a, b: a & b, (F.col(c) == F.lit(v) for c, v in k.items())
-        )
-
-    return reduce(lambda a, b: a | b, (one(k) for k in keys))
+    cols = list(keys[0])
+    return F.struct(*cols).isin(
+        [F.struct(*[F.lit(k[c]).alias(c) for c in cols]) for k in keys]
+    )
 
 
 def _rel_dir(key: dict) -> str:
@@ -750,26 +783,39 @@ def register_external(
 ) -> str:
     """External-table DDL over a version directory (D1-D3,
     ``external_table.py:135-140``): DROP IF EXISTS then CREATE ... USING
-    parquet LOCATION. Dropping later removes only the catalog entry; data
-    files are untouched (the external-table ownership semantics the
-    reference documents, ``DESIGN.md:69-78``). Falls back to a temp view
-    when catalog DDL is unavailable (D4, ``external_table.py:83-86``)."""
+    parquet PARTITIONED BY ... LOCATION, declaring the snapshot's schema so
+    the catalog infers nothing from footers. Dropping later removes only
+    the catalog entry; data files are untouched (the external-table
+    ownership semantics the reference documents, ``DESIGN.md:69-78``).
+    Falls back to a temp view when catalog DDL is unavailable (D4,
+    ``external_table.py:83-86``)."""
     v = current_version(path) if version is None else version
-    if len(set(snapshot_of(path, v).values())) > 1:
-        # Snapshot spans version dirs (pruned MERGE/DELETE since the last
-        # full write) -- no single LOCATION exists, so register the view
-        # form (D4 fallback, ``external_table.py:83-86``). OPTIMIZE
-        # collapses the snapshot back into one dir, re-enabling D3.
-        read_table(spark, path, v).createOrReplaceTempView(name)
+    snap = snapshot_of(path, v)
+    df = read_table(spark, path, v)
+    home = next(iter(snap.values()), None)
+    if home is None or snap != {
+        rel: sv for rel, sv in snapshot_of(path, home).items() if sv == home
+    }:
+        # The snapshot is not exactly one version dir's own partitions
+        # (pruned MERGE/DELETE since the last full write, or an emptied
+        # table) -- no single LOCATION holds it, so register the view form
+        # (D4 fallback, ``external_table.py:83-86``). OPTIMIZE collapses
+        # the snapshot back into one dir, re-enabling D3.
+        df.createOrReplaceTempView(name)
         return "view"
-    loc = _version_dir(path, v)
+    loc = _version_dir(path, home)
+    rel = next(iter(snap))
+    pcols = [seg.split("=", 1)[0] for seg in rel.split("/")] if rel else []
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
+    parted = f" PARTITIONED BY ({', '.join(f'`{c}`' for c in pcols)})" if pcols else ""
     try:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.sql(f"CREATE TABLE {name} USING parquet LOCATION '{loc}'")
-        spark.sql(f"MSCK REPAIR TABLE {name}")  # discover partition dirs
+        spark.sql(f"CREATE TABLE {name} ({cols}) USING parquet{parted} LOCATION '{loc}'")
+        if pcols:
+            spark.sql(f"MSCK REPAIR TABLE {name}")  # register partition dirs
         return "table"
     except Exception:
-        spark.read.parquet(loc).createOrReplaceTempView(name)
+        df.createOrReplaceTempView(name)
         return "view"
 
 

@@ -796,3 +796,150 @@ def test_merge_commit_writes_one_file_per_partition(spark, bars, tmp_path_factor
             for r in storage.history(spark, path).collect()}
     d = hist["DELETE"]
     assert d["numFiles"] == d["numRewrittenPartitions"], d
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), ids of the Spark jobs it ran) -- counted under a job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred_read(spark, path, version):
+    """The snapshot read with every schema inferred from parquet footers."""
+    by_ver: dict[int, list[str]] = {}
+    for rel, sv in storage.snapshot_of(path, version).items():
+        by_ver.setdefault(sv, []).append(os.path.join(path, f"v{sv:04d}", rel))
+    frames = [
+        spark.read.option("basePath", os.path.join(path, f"v{sv:04d}")).parquet(*dirs)
+        for sv, dirs in sorted(by_ver.items())
+    ]
+    df = frames[0]
+    for f in frames[1:]:
+        df = df.unionByName(f, allowMissingColumns=True)
+    return df
+
+
+def _fields(schema):
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in schema.fields]
+
+
+@pytest.mark.parametrize("case", ["single_version", "pruned_merge", "evolve_schema_merge"])
+def test_read_table_plans_from_manifest_without_jobs(spark, bars, tmp_path_factory, case):
+    """Opening a snapshot runs no Spark job -- no footer inference, no
+    distributed listing -- for a single-version table, after a pruned MERGE
+    and after an ``evolve_schema`` MERGE; the declared schema equals what
+    footer inference gives for the same snapshot."""
+    path = str(tmp_path_factory.mktemp("stocks_nojobs") / "stocks")
+    storage.write_partitioned(bars, path)
+    one = storage.read_table(spark, path).orderBy("ticker", "timestamp_ms").limit(1)
+    n0 = storage.read_table(spark, path).count()
+    if case != "single_version":
+        bumped = one.withColumn("volume", (F.col("volume") + 7).cast("long"))
+        storage.merge_into(spark, path, bumped, ["ticker", "timestamp_ms"])
+        assert len(set(storage.snapshot_of(path, 1).values())) == 2
+    if case == "evolve_schema_merge":
+        evolved = one.withColumn("adj_close", F.col("close") * 0.5)
+        storage.merge_into(
+            spark, path, evolved, ["ticker", "timestamp_ms"], evolve_schema=True
+        )
+
+    df, jobs = _jobs_run_by(spark, lambda: storage.read_table(spark, path))
+    assert jobs == [], f"building the read ran jobs {jobs}"
+    v = storage.current_version(path)
+    assert _fields(df.schema) == _fields(_inferred_read(spark, path, v).schema)
+    assert df.count() == n0
+    assert ("adj_close" in df.columns) == (case == "evolve_schema_merge")
+
+
+def test_read_table_infers_schema_for_entries_without_one(spark, bars, tmp_path_factory):
+    """Manifests written before entries carried a schema still read, by
+    footer inference, to the same rows and schema."""
+    path = str(tmp_path_factory.mktemp("stocks_noschema") / "stocks")
+    storage.write_partitioned(bars, path)
+    one = storage.read_table(spark, path).orderBy("ticker", "timestamp_ms").limit(1)
+    storage.merge_into(
+        spark, path, one.withColumn("volume", F.lit(1).cast("long")), ["ticker", "timestamp_ms"]
+    )
+    declared = storage.read_table(spark, path)
+    want_fields, want_rows = _fields(declared.schema), sorted(declared.collect())
+    mpath = os.path.join(path, storage.table.MANIFEST)
+    with open(mpath) as f:
+        entries = [json.loads(line) for line in f if line.strip()]
+    assert all("schema" in e for e in entries)
+    with open(mpath, "w") as f:
+        for e in entries:
+            e.pop("schema")
+            f.write(json.dumps(e) + "\n")
+    got = storage.read_table(spark, path)
+    assert _fields(got.schema) == want_fields
+    assert sorted(got.collect()) == want_rows
+
+
+def test_merge_over_480_partitions(spark, tmp_path_factory):
+    """A backfill MERGE whose updates land in 8 tickers x 60 dates commits:
+    its partition predicate is one flat IN over struct literals, where an
+    OR chain of 480 conjunctions overflowed the analyzer's stack."""
+    path = str(tmp_path_factory.mktemp("stocks_backfill") / "stocks")
+    wide = storage.with_derived_columns(
+        storage.synthesize_bars(spark, n_tickers=8, n_days=60, bars_per_day=2)
+    )
+    storage.write_partitioned(wide, path)
+    assert len(storage.snapshot_of(path, 0)) == 480
+    # One bar per (ticker, day) gets a new volume: every partition changes.
+    updates = wide.filter(F.col("timestamp_ms") % (2 * 60_000) == 0).withColumn(
+        "volume", (F.col("volume") + 1_000_000).cast("long")
+    )
+    assert updates.count() == 480
+    v = storage.merge_into(spark, path, updates, ["ticker", "timestamp_ms"])
+
+    key = ["ticker", "timestamp_ms"]
+    want = (
+        wide.join(updates.select(*key), key, "left_anti")
+        .unionByName(updates)
+        .select(*key, "volume")
+    )
+    got = storage.read_table(spark, path).select(*key, "volume")
+    assert sorted(got.collect()) == sorted(want.collect())
+    metrics = {r["version"]: json.loads(r["operationMetrics"])
+               for r in storage.history(spark, path).collect()}
+    assert metrics[v]["numRewrittenPartitions"] == 480
+
+
+def test_history_schema_and_empty_manifest(spark, tmp_path_factory):
+    """history is a 4-column frame in version order; a table path without
+    a manifest gives zero rows of the same schema."""
+    empty = storage.history(spark, str(tmp_path_factory.mktemp("no_table")))
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<version:int,timestamp:string,operation:string,operationMetrics:string>"
+    )
+
+
+def test_register_external_declares_read_table_schema(spark, bars, tmp_path_factory):
+    """The catalog table is declared with the snapshot's schema (no footer
+    inference) and matches read_table's columns, types and order; after a
+    RESTORE it points at the dir that holds the restored snapshot."""
+    path = str(tmp_path_factory.mktemp("stocks_register") / "stocks")
+    storage.write_partitioned(bars, path)
+    kind = storage.register_external(spark, "stocks_declared", path)
+    if kind != "table":
+        pytest.skip("catalog DDL unavailable")
+    try:
+        want = storage.read_table(spark, path)
+        got = spark.table("stocks_declared")
+        assert [f[:2] for f in _fields(got.schema)] == [f[:2] for f in _fields(want.schema)]
+        assert got.count() == want.count()
+
+        storage.delete_where(spark, path, f"ticker = '{bars.first()['ticker']}'")
+        storage.restore(path, 0)
+        assert storage.register_external(spark, "stocks_declared", path) == "table"
+        assert spark.table("stocks_declared").count() == want.count()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS stocks_declared")
