@@ -19,8 +19,10 @@ with scale-oriented defaults:
   host, warm median of 5): 1 job and 1.67 s at the default threshold
   with the manifest-declared schema (``storage/table.py``), 0 jobs and
   0.19 s raised; inferring footers as well took 3 jobs and 2.05 s. The
-  same threshold governs ``MSCK REPAIR TABLE`` and catalog partition
-  listing.
+  same threshold governs catalog partition listing. (Registering a
+  table lists nothing: ``storage.register_external`` declares the
+  snapshot's partitions with ``ALTER TABLE ... ADD PARTITION`` instead
+  of ``MSCK REPAIR TABLE``, whose partition-stats job it no longer runs.)
 * Delta Lake extensions are attached only when delta-spark is importable
   (it is optional in this environment); everything else degrades to parquet.
 """

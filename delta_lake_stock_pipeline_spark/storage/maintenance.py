@@ -20,12 +20,18 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from .table import (
-    _dir_file_stats,
+    _REL,
+    _entries,
+    _partition_keys,
+    _partition_stats,
+    _snapshot_stats,
+    _totals,
     _version_dir,
     current_version,
     read_table,
     remove_versions_before,
     snapshot_dirs,
+    snapshot_of,
     write_partitioned,
 )
 
@@ -175,16 +181,41 @@ class HealthReport:
 def health_check(
     spark: SparkSession, path: str, key_col: str = "ticker"
 ) -> HealthReport:
+    """File count and size from a walk of the live snapshot's partition
+    dirs; row count and per-``key_col`` counts from the manifest's
+    ``partitionStats`` when they can be trusted, which runs no Spark job
+    (Delta's ``DESCRIBE DETAIL`` reads its log the same way). They are
+    trusted only when every snapshot partition has stats, ``key_col`` is a
+    partition column, and each partition's walked file count and bytes
+    equal its stats -- a stray or missing file behind the manifest fails
+    that. Otherwise the counts come from a ``groupBy(key_col)`` scan. Key
+    values have the scan's Python types either way."""
     v = current_version(path)
     if v is None:
         raise FileNotFoundError(f"no versions at {path}")
-    n_files, size = 0, 0
-    for d in snapshot_dirs(path, v):  # snapshot may span version dirs
-        nf, sz = _dir_file_stats(d)
-        n_files += nf
-        size += sz
-    df = read_table(spark, path)
-    counts = {r[0]: r[1] for r in df.groupBy(key_col).count().collect()}
+    snap = snapshot_of(path, v)
+    walked = {
+        rel: _totals(_partition_stats(os.path.join(_version_dir(path, sv), rel), rows=False))
+        for rel, sv in snap.items()
+    }
+    n_files = sum(w["numFiles"] for w in walked.values())
+    size = sum(w["sizeBytes"] for w in walked.values())
+    entries = _entries(path)
+    stats = _snapshot_stats(entries, snap)
+    trusted = all(
+        st is not None
+        and (st["numFiles"], st["sizeBytes"]) == (walked[rel]["numFiles"], walked[rel]["sizeBytes"])
+        for rel, st in stats.items()
+    )
+    keys = _partition_keys(spark, entries, snap) if trusted else None
+    if keys is not None and key_col in keys.columns[1:]:
+        counts: dict = {}
+        for rel, key in keys.select(_REL, key_col).collect():
+            counts[key] = counts.get(key, 0) + stats[rel]["numRecords"]
+        counts = {k: n for k, n in counts.items() if n}
+    else:
+        df = read_table(spark, path)
+        counts = {r[0]: r[1] for r in df.groupBy(key_col).count().collect()}
     return HealthReport(
         num_files=n_files,
         total_mb=round(size / 1e6, 3),

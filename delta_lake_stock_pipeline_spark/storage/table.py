@@ -4,15 +4,32 @@ Re-expresses the reference's Delta lifecycle on plain parquet (SURVEY.md
 §7.4 risk 2 fallback): each write lands an immutable version directory
 ``v0000, v0001, ...`` under the table path and appends one JSONL manifest
 entry ``{version, timestamp, operation, operationMetrics, snapshot,
-schema}`` -- the shape ``DeltaTable.history()`` exposes
+schema, partitionStats}`` -- the shape ``DeltaTable.history()`` exposes
 (``maintenance.py:87-91``).
 
 The manifest is the only thing a read consults, as Delta readers take a
-snapshot from the log rather than the file system: ``snapshot`` names the
-partition dirs and ``schema`` is the written frame's schema JSON (Delta's
-``metaData.schemaString``). Opening a snapshot therefore plans without
-Spark jobs -- no footer-inference job per version dir. Entries without a
-schema (older manifests, clones) fall back to footer inference.
+snapshot from the log rather than the file system: ``snapshot`` maps each
+partition's relative dir (Hive-style, escaped the way Spark names it) to
+the version dir holding its files; ``schema`` is the written frame's
+schema JSON (Delta's ``metaData.schemaString``); ``partitionStats`` gives
+``{numRecords, numFiles, sizeBytes}`` per partition the commit wrote (the
+per-file stats of Delta's ``add`` actions, summed per partition). Only
+commits that write a version dir carry the last two; metadata-only commits
+(RESTORE, partition DELETE) carry just the snapshot, and a partition's
+schema and stats are looked up on the entry of the version that wrote it.
+
+Metadata-only operations run no Spark job:
+
+* opening a snapshot (no footer-inference or listing job per version dir;
+  entries without a schema -- older manifests -- fall back to inference);
+* a DELETE whose condition is deterministic and references partition
+  columns only: the condition is evaluated over the snapshot's partition
+  keys, held as a LocalRelation, and matching partitions drop out of the
+  snapshot -- nothing read, nothing written;
+* ``history``, and (in ``register_external``) the catalog table's
+  columns and partitions;
+* ``maintenance.health_check`` row and key counts, while the recorded
+  stats still agree with the files on disk.
 
 Isolation model: readers resolve a version directory once and only ever see
 its immutable files; writers only add new directories. That is the essential
@@ -25,11 +42,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.jsonl"
 # Non-version directory a CLONE of an emptied table uses to carry the
@@ -57,20 +76,178 @@ def _append_manifest(path: str, entry: dict) -> None:
         f.write(json.dumps(entry) + "\n")
 
 
+def _commit(
+    path: str, version: int, operation: str, metrics: dict, snapshot: dict, **extra
+) -> int:
+    """Append ``version``'s manifest entry; ``extra`` adds ``schema`` /
+    ``partitionStats`` for commits that wrote a version dir."""
+    _append_manifest(
+        path,
+        {
+            "version": version,
+            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "operation": operation,
+            "operationMetrics": metrics,
+            "snapshot": snapshot,
+            **extra,
+        },
+    )
+    return version
+
+
 def _version_dir(path: str, version: int) -> str:
     return os.path.join(path, f"v{version:04d}")
 
 
-def _partition_rel_dirs(version_root: str) -> list[str]:
-    """Relative partition directories (e.g. ``ticker=T00/trade_date=...``)
-    that contain parquet files under a version dir; ``""`` for a flat
-    (unpartitioned) layout."""
-    rels = set()
-    for dirpath, _dirs, files in os.walk(version_root):
-        if any(f.endswith(".parquet") for f in files):
-            rel = os.path.relpath(dirpath, version_root)
-            rels.add("" if rel == "." else rel)
-    return sorted(rels)
+def _partition_stats(root: str, rows: bool = True) -> dict[str, dict]:
+    """``{rel: {numRecords, numFiles, sizeBytes}}`` for every directory
+    under ``root`` holding parquet files, keyed by its path relative to
+    ``root`` (``ticker=T00/trade_date=...``; ``""`` for a flat layout).
+    Row counts come from the parquet footers; ``rows=False`` skips them
+    (``numRecords`` is then None) and only lists and stats the files --
+    the reference's local walk (``maintenance.py:55-62``)."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        parquet = [os.path.join(dirpath, f) for f in files if f.endswith(".parquet")]
+        if parquet:
+            rel = os.path.relpath(dirpath, root)
+            out["" if rel == "." else rel] = {
+                "numRecords": sum(pq.read_metadata(f).num_rows for f in parquet)
+                if rows
+                else None,
+                "numFiles": len(parquet),
+                "sizeBytes": sum(os.path.getsize(f) for f in parquet),
+            }
+    return dict(sorted(out.items()))
+
+
+def _totals(stats: dict[str, dict]) -> dict:
+    """Sum per-partition stats (``numRecords`` stays None if any is)."""
+    rows = [s["numRecords"] for s in stats.values()]
+    return {
+        "numRecords": None if None in rows else sum(rows),
+        "numFiles": sum(s["numFiles"] for s in stats.values()),
+        "sizeBytes": sum(s["sizeBytes"] for s in stats.values()),
+    }
+
+
+# Spark's ExternalCatalogUtils.escapePathName set: ASCII controls plus
+# these characters are written as %XX in partition dir names.
+_ESCAPED = {chr(c) for c in range(1, 0x20)} | set("\"#%'*/:=?\\\x7f{[]^")
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _escape(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in s)
+
+
+def _unescape(s: str) -> str:
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s)
+
+
+def _rel_dir(key: dict) -> str:
+    """Hive-style relative dir for a partition key, named as ``partitionBy``
+    names it: names and values escaped, NULL and empty strings as
+    ``__HIVE_DEFAULT_PARTITION__``, booleans lower-case."""
+
+    def text(v) -> str:
+        if v is None or v == "":
+            return _NULL_PARTITION
+        return _escape(str(v).lower() if isinstance(v, bool) else str(v))
+
+    return "/".join(f"{_escape(c)}={text(v)}" for c, v in key.items())
+
+
+def _parse_rel(rel: str) -> dict[str, str | None]:
+    """Inverse of :func:`_rel_dir`: ``{column: raw value}`` in layout
+    order, None for the default (NULL) partition; ``{}`` for ``""``."""
+    out = {}
+    for seg in rel.split("/") if rel else []:
+        c, v = seg.split("=", 1)
+        out[_unescape(c)] = None if v == _NULL_PARTITION else _unescape(v)
+    return out
+
+
+def _entries(path: str) -> dict[int, dict]:
+    """Manifest entries by version."""
+    return {e.get("version"): e for e in _read_manifest(path)}
+
+
+def _recorded_schema(entries: dict[int, dict], versions) -> StructType | None:
+    """Union of the schemas the commits of ``versions`` recorded, fields in
+    first-seen order by version; None if any of them recorded none."""
+    fields: dict = {}
+    for v in sorted(set(versions)):
+        schema = entries.get(v, {}).get("schema")
+        if schema is None:
+            return None
+        for f in StructType.fromJson(json.loads(schema)).fields:
+            fields.setdefault(f.name, f)
+    return StructType(list(fields.values()))
+
+
+def _snapshot_stats(entries: dict[int, dict], snap: dict[str, int]) -> dict[str, dict | None]:
+    """Each snapshot partition's recorded stats, looked up on the entry of
+    the version that wrote it; None where that entry recorded none."""
+    return {
+        rel: entries.get(sv, {}).get("partitionStats", {}).get(rel)
+        for rel, sv in snap.items()
+    }
+
+
+def _sql_str(v) -> str:
+    """``v`` as a Spark SQL string literal; NULL for None."""
+    if v is None:
+        return "NULL"
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _local_relation(
+    spark: SparkSession, fields: Sequence[tuple[str, str]], rows: list[list]
+) -> DataFrame:
+    """Inline ``VALUES`` of ``rows`` -- each value given as text or None --
+    cast to ``fields``' ``(name, SQL type)``. The result is a
+    LocalRelation, which Spark filters, projects and collects on the
+    driver without a job (a ``range`` scan or a pickled-RDD
+    ``createDataFrame`` runs one). No rows give the empty frame of the
+    same schema."""
+    values = ", ".join(
+        "(" + ", ".join(f"CAST({_sql_str(v)} AS {t})" for v, (_, t) in zip(row, fields)) + ")"
+        for row in rows or [[None] * len(fields)]
+    )
+    names = ", ".join(f"`{n}`" for n, _ in fields)
+    df = spark.sql(f"SELECT * FROM VALUES {values} AS t({names})")
+    return df if rows else df.limit(0)
+
+
+# Column of _partition_keys holding each partition's relative dir.
+_REL = "__rel"
+
+
+def _partition_keys(
+    spark: SparkSession, entries: dict[int, dict], snap: dict[str, int]
+) -> DataFrame | None:
+    """The snapshot's partition keys as a LocalRelation: one row per
+    partition, its relative dir in ``_REL`` and each partition column typed
+    from the recorded schema. None when the snapshot is empty or flat, or
+    no recorded schema types its partition columns."""
+    keys = {rel: _parse_rel(rel) for rel in snap}
+    cols = list(next(iter(keys.values()), {}))
+    schema = _recorded_schema(entries, snap.values())
+    if (
+        not cols
+        or schema is None
+        or not set(cols) <= set(schema.names)
+        or any(list(k) != cols for k in keys.values())
+    ):
+        return None
+    return _local_relation(
+        spark,
+        [(_REL, "string")] + [(c, schema[c].dataType.simpleString()) for c in cols],
+        [[rel, *k.values()] for rel, k in keys.items()],
+    )
 
 
 def _entry_for(path: str, version: int) -> dict | None:
@@ -91,7 +268,7 @@ def snapshot_of(path: str, version: int) -> dict[str, int]:
     entry = _entry_for(path, version)
     if entry and "snapshot" in entry:
         return {k: int(v) for k, v in entry["snapshot"].items()}
-    return {rel: version for rel in _partition_rel_dirs(_version_dir(path, version))}
+    return {rel: version for rel in _partition_stats(_version_dir(path, version), rows=False)}
 
 
 def snapshot_dirs(path: str, version: int) -> list[str]:
@@ -105,18 +282,6 @@ def snapshot_dirs(path: str, version: int) -> list[str]:
 def current_version(path: str) -> int | None:
     entries = [e for e in _read_manifest(path) if "version" in e]
     return max((e["version"] for e in entries), default=None)
-
-
-def _dir_file_stats(root: str) -> tuple[int, int]:
-    """(num parquet files, total bytes) -- the reference's local walk
-    (``maintenance.py:55-62``)."""
-    n, size = 0, 0
-    for dirpath, _dirs, files in os.walk(root):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                n += 1
-                size += os.path.getsize(os.path.join(dirpath, fn))
-    return n, size
 
 
 def write_partitioned(
@@ -134,10 +299,10 @@ def write_partitioned(
     ``stock_harvester.py:170-181``) and log it. Returns the new version.
 
     The manifest entry records ``df``'s schema, which later reads of this
-    version dir declare instead of inferring it from parquet footers.
-
-    Row count is captured via ``observe`` so the write job itself produces
-    the metric -- no second scan over the data (at 100 TB a metrics
+    version dir declare instead of inferring it from parquet footers, and
+    ``partitionStats``: rows, files and bytes per written partition, the
+    rows read from the new files' parquet footers on the driver -- no
+    second scan over the data and no extra Spark job (at 100 TB a metrics
     ``count()`` would double the job).
 
     ``max_records_per_file`` is the file-size governor (the "~1 GB not
@@ -158,7 +323,6 @@ def write_partitioned(
     repartition + sortWithinPartitions z-ordering) must not be
     re-shuffled. The shuffle width follows spark.sql.shuffle.partitions
     + AQE coalescing, so it stays scale-adaptive."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     if distribute_by_partition and partition_cols:
@@ -167,16 +331,14 @@ def write_partitioned(
     cur = current_version(path)
     version = 0 if cur is None else cur + 1
     out = _version_dir(path, version)
-    obs = Observation(f"write_v{version}")
-    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    writer = observed.write.mode("error").partitionBy(*partition_cols)
+    writer = df.write.mode("error").partitionBy(*partition_cols)
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if codec is not None:
         writer = writer.option("compression", codec)
     writer.parquet(out)
-    n_files, size = _dir_file_stats(out)
-    own = {rel: version for rel in _partition_rel_dirs(out)}
+    stats = _partition_stats(out)
+    own = {rel: version for rel in stats}
     if base_snapshot is None:
         snapshot = own
     else:
@@ -189,26 +351,24 @@ def write_partitioned(
             if rel not in set(replaced or ())
         }
         snapshot.update(own)
+    total = _totals(stats)
     metrics = {
-        "numOutputRows": obs.get["rows"],
-        "numFiles": n_files,
-        "sizeBytes": size,
+        "numOutputRows": total["numRecords"],
+        "numFiles": total["numFiles"],
+        "sizeBytes": total["sizeBytes"],
         "partitionBy": list(partition_cols),
         "numRewrittenPartitions": len(own),
         "numReferencedPartitions": len(snapshot) - len(own),
     }
-    _append_manifest(
+    return _commit(
         path,
-        {
-            "version": version,
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "operation": operation,
-            "operationMetrics": metrics,
-            "snapshot": snapshot,
-            "schema": df.schema.json(),
-        },
+        version,
+        operation,
+        metrics,
+        snapshot,
+        schema=df.schema.json(),
+        partitionStats=stats,
     )
-    return version
 
 
 def _parse_ts(ts: str):
@@ -308,22 +468,17 @@ def restore(path: str, version: int) -> int:
             f"cannot restore {path} to version {version}: "
             f"{len(missing)} referenced dirs were vacuumed (e.g. {missing[0]})"
         )
-    new_version = cur + 1
-    _append_manifest(
+    return _commit(
         path,
+        cur + 1,
+        "RESTORE",
         {
-            "version": new_version,
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "operation": "RESTORE",
-            "operationMetrics": {
-                "restoredVersion": version,
-                "numReferencedPartitions": len(target),
-                "numRewrittenPartitions": 0,
-            },
-            "snapshot": target,
+            "restoredVersion": version,
+            "numReferencedPartitions": len(target),
+            "numRewrittenPartitions": 0,
         },
+        target,
     )
-    return new_version
 
 
 def _read_rels(
@@ -339,15 +494,13 @@ def _read_rels(
     a RESTORE reads every dir with the columns it was written with, and no
     footer is inferred. A version whose whole dir is wanted is read by its
     root."""
-    from pyspark.sql.types import StructType
-
     by_ver: dict[int, list[str]] = {}
     for rel in rels:
         if rel in snap:
             by_ver.setdefault(snap[rel], []).append(rel)
     if not by_ver:
         return None
-    entries = {e.get("version"): e for e in _read_manifest(path)}
+    entries = _entries(path)
     frames = []
     for sv, vrels in sorted(by_ver.items()):
         vdir = _version_dir(path, sv)
@@ -513,24 +666,29 @@ def clone_table(src_path: str, dst_path: str) -> int:
                 shutil.copy2(s, d)
             n_files += 1
             size += os.path.getsize(s)
-    _append_manifest(
+    # The source entries' schema and stats carry over, so the clone reads
+    # without footer inference and its health checks stay metadata-only.
+    entries = _entries(src_path)
+    schema = _recorded_schema(entries, snap.values())
+    extra = {} if schema is None else {"schema": schema.json()}
+    if not src_empty:
+        extra["partitionStats"] = {
+            rel: st for rel, st in _snapshot_stats(entries, snap).items() if st
+        }
+    _commit(
         dst_path,
+        0,
+        "CLONE",
         {
-            "version": 0,
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "operation": "CLONE",
-            "operationMetrics": {
-                "sourceTable": src_path,
-                "sourceVersion": src_cur,
-                # Metrics describe the cloned STATE: zero files for an
-                # empty source (the schema carrier is not table data).
-                "numFiles": 0 if src_empty else n_files,
-                "sizeBytes": 0 if src_empty else size,
-            },
-            "snapshot": {}
-            if src_empty
-            else {rel: 0 for rel in _partition_rel_dirs(out)},
+            "sourceTable": src_path,
+            "sourceVersion": src_cur,
+            # Metrics describe the cloned STATE: zero files for an
+            # empty source (the schema carrier is not table data).
+            "numFiles": 0 if src_empty else n_files,
+            "sizeBytes": 0 if src_empty else size,
         },
+        {} if src_empty else {rel: 0 for rel in snap},
+        **extra,
     )
     return 0
 
@@ -598,37 +756,27 @@ def history(spark: SparkSession, path: str) -> DataFrame:
     """Manifest as a DataFrame -- version/timestamp/operation/metrics ordered
     by version (M4, ``maintenance.py:87-91``).
 
-    The rows travel as JVM literals (``range(1)`` + ``explode`` of struct
-    literals, as in ``operators/similarity.py``): a pickled-RDD
-    ``createDataFrame`` would fork Python workers on every action."""
-    from pyspark.sql import functions as F
-
-    def row(version, timestamp, operation, metrics):
-        return (
-            F.lit(version).cast("int").alias("version"),
-            F.lit(timestamp).cast("string").alias("timestamp"),
-            F.lit(operation).cast("string").alias("operation"),
-            F.lit(metrics).cast("string").alias("operationMetrics"),
-        )
-
+    The rows are an inline ``VALUES`` LocalRelation (see
+    ``_local_relation``), so collecting it runs no Spark job; a manifest
+    with no entries gives zero rows of the same four columns."""
     entries = sorted(_read_manifest(path), key=lambda e: e["version"])
-    if not entries:  # same schema, zero rows
-        return spark.range(0).select(*row(0, "", "", ""))
-    structs = [
-        F.struct(
-            *row(
+    return _local_relation(
+        spark,
+        [
+            ("version", "int"),
+            ("timestamp", "string"),
+            ("operation", "string"),
+            ("operationMetrics", "string"),
+        ],
+        [
+            [
                 e["version"],
                 e["timestamp"],
                 e["operation"],
                 json.dumps(e.get("operationMetrics", {})),
-            )
-        )
-        for e in entries
-    ]
-    return (
-        spark.range(1, numPartitions=1)
-        .select(F.explode(F.array(*structs)).alias("s"))
-        .select("s.*")
+            ]
+            for e in entries
+        ],
     )
 
 
@@ -644,13 +792,6 @@ def _partition_pred(keys: list[dict]):
     return F.struct(*cols).isin(
         [F.struct(*[F.lit(k[c]).alias(c) for c in cols]) for k in keys]
     )
-
-
-def _rel_dir(key: dict) -> str:
-    """Hive-style relative dir for a partition key, matching what
-    ``partitionBy`` writes for the scalar types used here (strings without
-    special characters, dates, ints)."""
-    return "/".join(f"{c}={v}" for c, v in key.items())
 
 
 def merge_into(
@@ -746,18 +887,67 @@ def delete_where(
     condition: str,
     partition_cols: Sequence[str] = DEFAULT_PARTITION_COLS,
 ) -> int:
-    """DELETE: remove rows matching ``condition`` (Delta ``DELETE FROM``)
-    as a partition-pruned copy-on-write commit: only partitions that
-    contain at least one matching row are rewritten (minus their matching
-    rows; a partition emptied entirely just drops out of the snapshot);
-    all other partitions carry over by reference. A condition on partition
-    columns only makes the rewrite metadata-cheap -- matching partitions
-    vanish without writing a row."""
+    """DELETE: remove rows matching ``condition`` (Delta ``DELETE FROM``).
+
+    A deterministic condition on partition columns only is answered from
+    the manifest, as Delta answers it from its log: the condition is
+    evaluated over the snapshot's partition keys (``_partition_keys``, a
+    LocalRelation, so no Spark job) and the matching partitions drop out
+    of the new snapshot. That commit reads no row, writes no file and
+    creates no version dir; its ``operationMetrics`` give
+    ``numRemovedPartitions``, ``numRemovedFiles`` and ``numDeletedRows``
+    from the partitions' recorded stats (footers where none were
+    recorded).
+
+    Any other condition -- one that reads a data column (it fails to
+    resolve against the keys) or is non-deterministic -- is a
+    partition-pruned copy-on-write commit: only partitions that contain at
+    least one matching row are rewritten (minus their matching rows; a
+    partition emptied entirely just drops out of the snapshot); all other
+    partitions carry over by reference. Either way a condition that
+    matches nothing commits nothing and returns the current version."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
+
+    cur_v = current_version(path)
+    entries = _entries(path)
+    snap = snapshot_of(path, cur_v) if cur_v is not None else {}
+    keys = _partition_keys(spark, entries, snap)
+    matched = None
+    if keys is not None:
+        try:
+            matched = keys.filter(condition)
+        except AnalysisException:  # references a data column
+            pass
+    if matched is not None and matched._jdf.queryExecution().analyzed().condition().deterministic():
+        dropped = {r[0]: snap[r[0]] for r in matched.select(_REL).collect()}
+        if not dropped:
+            return cur_v
+        recorded = _snapshot_stats(entries, dropped)
+        removed = _totals(
+            {
+                rel: recorded[rel]
+                or _totals(_partition_stats(os.path.join(_version_dir(path, sv), rel)))
+                for rel, sv in dropped.items()
+            }
+        )
+        kept = {rel: v for rel, v in snap.items() if rel not in dropped}
+        return _commit(
+            path,
+            cur_v + 1,
+            "DELETE",
+            {
+                "numRemovedPartitions": len(dropped),
+                "numRemovedFiles": removed["numFiles"],
+                "numDeletedRows": removed["numRecords"],
+                "numRewrittenPartitions": 0,
+                "numReferencedPartitions": len(kept),
+            },
+            kept,
+        )
 
     current = read_table(spark, path)
     pcols = list(partition_cols)
-    cur_v = current_version(path)
     cond = F.expr(condition)
     affected = [
         r.asDict()
@@ -772,7 +962,7 @@ def delete_where(
         path,
         pcols,
         operation="DELETE",
-        base_snapshot=snapshot_of(path, cur_v),
+        base_snapshot=snap,
         replaced=[_rel_dir(k) for k in affected],
         distribute_by_partition=True,
     )
@@ -782,40 +972,50 @@ def register_external(
     spark: SparkSession, name: str, path: str, version: int | None = None
 ) -> str:
     """External-table DDL over a version directory (D1-D3,
-    ``external_table.py:135-140``): DROP IF EXISTS then CREATE ... USING
-    parquet PARTITIONED BY ... LOCATION, declaring the snapshot's schema so
-    the catalog infers nothing from footers. Dropping later removes only
-    the catalog entry; data files are untouched (the external-table
+    ``external_table.py:135-140``): DROP IF EXISTS, CREATE ... USING
+    parquet PARTITIONED BY ... LOCATION, then one ALTER TABLE ... ADD
+    PARTITION naming the snapshot's partitions. Columns and partitions
+    both come from the manifest -- the recorded schema and the snapshot --
+    so the catalog infers no footer and lists no directory (``MSCK REPAIR
+    TABLE`` would run a partition-stats job, and register every dir under
+    LOCATION, including ones the snapshot dropped). Dropping later removes
+    only the catalog entry; data files are untouched (the external-table
     ownership semantics the reference documents, ``DESIGN.md:69-78``).
     Falls back to a temp view when catalog DDL is unavailable (D4,
     ``external_table.py:83-86``)."""
     v = current_version(path) if version is None else version
     snap = snapshot_of(path, v)
-    df = read_table(spark, path, v)
-    home = next(iter(snap.values()), None)
-    if home is None or snap != {
-        rel: sv for rel, sv in snapshot_of(path, home).items() if sv == home
-    }:
-        # The snapshot is not exactly one version dir's own partitions
-        # (pruned MERGE/DELETE since the last full write, or an emptied
-        # table) -- no single LOCATION holds it, so register the view form
-        # (D4 fallback, ``external_table.py:83-86``). OPTIMIZE collapses
-        # the snapshot back into one dir, re-enabling D3.
-        df.createOrReplaceTempView(name)
+    homes = set(snap.values())
+    if len(homes) != 1:
+        # The snapshot spans version dirs (pruned MERGE since the last full
+        # write) or is empty -- no single LOCATION holds it, so register
+        # the view form (D4 fallback, ``external_table.py:83-86``).
+        # OPTIMIZE collapses the snapshot back into one dir, re-enabling D3.
+        read_table(spark, path, v).createOrReplaceTempView(name)
         return "view"
-    loc = _version_dir(path, home)
-    rel = next(iter(snap))
-    pcols = [seg.split("=", 1)[0] for seg in rel.split("/")] if rel else []
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
+    home = homes.pop()
+    schema = _recorded_schema(_entries(path), [home])
+    if schema is None:  # a manifest from before schemas were recorded
+        schema = read_table(spark, path, v).schema
+    parts = [_parse_rel(rel) for rel in snap]
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+    pcols = list(parts[0])
     parted = f" PARTITIONED BY ({', '.join(f'`{c}`' for c in pcols)})" if pcols else ""
+    specs = " ".join(
+        "PARTITION (" + ", ".join(f"`{c}` = {_sql_str(x)}" for c, x in p.items()) + ")"
+        for p in parts
+    )
     try:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.sql(f"CREATE TABLE {name} ({cols}) USING parquet{parted} LOCATION '{loc}'")
+        spark.sql(
+            f"CREATE TABLE {name} ({cols}) USING parquet{parted} "
+            f"LOCATION '{_version_dir(path, home)}'"
+        )
         if pcols:
-            spark.sql(f"MSCK REPAIR TABLE {name}")  # register partition dirs
+            spark.sql(f"ALTER TABLE {name} ADD {specs}")
         return "table"
     except Exception:
-        df.createOrReplaceTempView(name)
+        read_table(spark, path, v).createOrReplaceTempView(name)
         return "view"
 
 

@@ -379,7 +379,9 @@ def test_merge_is_partition_pruned(spark, bars, tmp_path_factory):
     storage.optimize(spark, path)
     assert set(storage.snapshot_of(path, 3).values()) == {3}
     removed = storage.vacuum(path, retain_last=1)
-    assert sorted(removed) == [0, 1, 2]
+    # The DELETE (v2) was metadata-only: it never had a version dir.
+    assert sorted(removed) == [0, 1]
+    assert not os.path.exists(os.path.join(path, "v0002"))
 
 
 def test_analyze_table_records_cbo_stats(spark, bars, tmp_path_factory):
@@ -916,7 +918,8 @@ def test_history_schema_and_empty_manifest(spark, tmp_path_factory):
     """history is a 4-column frame in version order; a table path without
     a manifest gives zero rows of the same schema."""
     empty = storage.history(spark, str(tmp_path_factory.mktemp("no_table")))
-    assert empty.collect() == []
+    rows, jobs = _jobs_run_by(spark, empty.collect)
+    assert rows == [] and jobs == []
     assert empty.schema.simpleString() == (
         "struct<version:int,timestamp:string,operation:string,operationMetrics:string>"
     )
@@ -943,3 +946,233 @@ def test_register_external_declares_read_table_schema(spark, bars, tmp_path_fact
         assert spark.table("stocks_declared").count() == want.count()
     finally:
         spark.sql("DROP TABLE IF EXISTS stocks_declared")
+
+
+def _version_dirs(path):
+    return sorted(d for d in os.listdir(path) if d.startswith("v"))
+
+
+def _scan_counts(spark, path, key_col):
+    return {r[0]: r[1] for r in storage.read_table(spark, path).groupBy(key_col).count().collect()}
+
+
+def _metrics(spark, path):
+    return {r["version"]: json.loads(r["operationMetrics"])
+            for r in storage.history(spark, path).collect()}
+
+
+def test_partition_dir_names_are_escaped(spark, tmp_path_factory):
+    """Partition values Spark escapes in dir names (``:``, ``=``, ``%``,
+    ``/``), writes as the default partition (NULL) or in lower case
+    (booleans) are matched by the names Spark gives them: a copy-on-write
+    DELETE that empties such a partition drops it from the snapshot
+    instead of leaving its old rows visible."""
+    path = str(tmp_path_factory.mktemp("escaped") / "t")
+    df = spark.createDataFrame(
+        [
+            (1, "A:B", True, 10),
+            (2, "plain", False, 20),
+            (3, None, True, 30),
+            (4, "x=y%z/w", False, 40),
+        ],
+        "k INT, p STRING, b BOOLEAN, v INT",
+    )
+    storage.write_partitioned(df, path, ["p", "b"])
+
+    def keys():
+        return sorted(r["k"] for r in storage.read_table(spark, path).collect())
+
+    storage.delete_where(spark, path, "v = 10", ["p", "b"])
+    assert keys() == [2, 3, 4]
+    storage.delete_where(spark, path, "v = 30", ["p", "b"])
+    assert keys() == [2, 4]
+    n_dirs = len(_version_dirs(path))
+    storage.delete_where(spark, path, "p = 'x=y%z/w'", ["p", "b"])  # metadata-only
+    assert keys() == [2]
+    assert len(_version_dirs(path)) == n_dirs
+
+    from delta_lake_stock_pipeline_spark.storage.table import _parse_rel, _rel_dir
+
+    rels = storage.snapshot_of(path, 0)
+    assert sorted((_parse_rel(rel)["p"] or "") for rel in rels) == ["", "A:B", "plain", "x=y%z/w"]
+    assert all(_rel_dir(_parse_rel(rel)) == rel for rel in rels)
+    # The catalog declares the same partitions by their unescaped values.
+    try:
+        assert storage.register_external(spark, "escaped_parts", path, version=0) == "table"
+        got = spark.table("escaped_parts").select(*df.columns).collect()
+        assert sorted(got) == sorted(df.collect())
+    finally:
+        spark.sql("DROP TABLE IF EXISTS escaped_parts")
+
+
+def test_partition_delete_is_metadata_only(spark, bars, tmp_path_factory):
+    """A DELETE on partition columns runs no Spark job and creates no
+    version dir: the matching partitions drop out of the snapshot, and the
+    commit's metrics count what they held."""
+    path = str(tmp_path_factory.mktemp("stocks_meta_delete") / "stocks")
+    storage.write_partitioned(bars, path)
+    tick = bars.select("ticker").orderBy("ticker").first()["ticker"]
+    want = storage.read_table(spark, path).filter(F.col("ticker") != tick).collect()
+
+    cond = f"ticker = '{tick}' AND trade_date >= DATE'2000-01-01'"
+    v, jobs = _jobs_run_by(spark, lambda: storage.delete_where(spark, path, cond))
+    assert jobs == [], f"partition DELETE ran jobs {jobs}"
+    assert v == 1 and _version_dirs(path) == ["v0000"]
+    assert sorted(storage.read_table(spark, path).collect()) == sorted(want)
+    m = _metrics(spark, path)[1]
+    assert m["numRemovedPartitions"] == 3 and m["numDeletedRows"] == 180
+    assert m["numReferencedPartitions"] == 3
+    # A partition condition that matches nothing commits nothing.
+    assert storage.delete_where(spark, path, "ticker = 'NONE'") == 1
+    assert storage.current_version(path) == 1
+
+
+@pytest.mark.parametrize("kind", ["data", "mixed", "nondeterministic"])
+def test_non_partition_delete_takes_copy_on_write(spark, bars, tmp_path_factory, kind):
+    """Conditions that read a data column, mix one in, or are
+    non-deterministic still rewrite the affected partitions."""
+    path = str(tmp_path_factory.mktemp("stocks_cow_delete") / "stocks")
+    storage.write_partitioned(bars, path)
+    tick = bars.select("ticker").orderBy("ticker").first()["ticker"]
+    # (condition, a deterministic condition matching the same rows)
+    cond, same = {
+        "data": ("volume % 2 = 0", "volume % 2 = 0"),
+        "mixed": (f"ticker = '{tick}' AND volume % 2 = 0", f"ticker = '{tick}' AND volume % 2 = 0"),
+        "nondeterministic": (f"ticker = '{tick}' AND rand() < 2.0", f"ticker = '{tick}'"),
+    }[kind]
+    want = storage.read_table(spark, path).filter(f"NOT ({same})").count()
+    storage.delete_where(spark, path, cond)
+    assert _version_dirs(path) == ["v0000", "v0001"]
+    assert storage.read_table(spark, path).count() == want
+    assert "numRemovedPartitions" not in _metrics(spark, path)[1]
+
+
+def test_metadata_ops_run_no_jobs(spark, bars, tmp_path_factory):
+    """health_check, register_external and history answer from the
+    manifest without a Spark job, with the counts a scan gives."""
+    path = str(tmp_path_factory.mktemp("stocks_meta_ops") / "stocks")
+    storage.write_partitioned(bars.repartition(4), path)
+    for key_col in ("ticker", "trade_date"):
+        report, jobs = _jobs_run_by(spark, lambda: storage.health_check(spark, path, key_col))
+        assert jobs == [], f"health_check ran jobs {jobs}"
+        assert report.key_counts == _scan_counts(spark, path, key_col)
+        assert report.row_count == bars.count()
+    try:
+        kind, jobs = _jobs_run_by(
+            spark, lambda: storage.register_external(spark, "stocks_nojobs", path)
+        )
+        assert kind == "table" and jobs == [], f"register_external ran jobs {jobs}"
+    finally:
+        spark.sql("DROP TABLE IF EXISTS stocks_nojobs")
+    rows, jobs = _jobs_run_by(spark, lambda: storage.history(spark, path).collect())
+    assert jobs == [] and [r["version"] for r in rows] == [0]
+
+
+def test_lifecycle_across_metadata_delete(spark, bars, tmp_path_factory):
+    """table_changes, register_external, VACUUM and RESTORE across a
+    metadata-only DELETE."""
+    path = str(tmp_path_factory.mktemp("stocks_meta_life") / "stocks")
+    storage.write_partitioned(bars, path)
+    n0 = bars.count()
+    tick = bars.select("ticker").orderBy("ticker").first()["ticker"]
+    storage.delete_where(spark, path, f"ticker = '{tick}'")
+
+    ch = storage.table_changes(spark, path, from_version=1)
+    assert ch.filter(F.col("_change_type") == "delete").count() == 180
+    assert ch.filter(F.col("_change_type") == "insert").count() == 0
+
+    def registers_as_table():
+        assert storage.register_external(spark, "stocks_meta_life", path) == "table"
+        got, want = spark.table("stocks_meta_life"), storage.read_table(spark, path)
+        assert sorted(got.select(*want.columns).collect()) == sorted(want.collect())
+
+    try:
+        registers_as_table()  # a subset of v0000's partitions
+        assert storage.vacuum(path, retain_last=1) == []  # v0 still referenced
+        assert storage.restore(path, 0) == 2
+        assert storage.read_table(spark, path).count() == n0
+        registers_as_table()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS stocks_meta_life")
+
+
+def test_health_from_stats_matches_scan(spark, bars, tmp_path_factory):
+    """Health counts taken from partitionStats equal the scan's after a
+    MERGE, an OPTIMIZE and a RESTORE, and need no job."""
+    path = str(tmp_path_factory.mktemp("stocks_health_stats") / "stocks")
+    storage.write_partitioned(bars.repartition(4), path)
+    first = storage.read_table(spark, path).orderBy("ticker", "timestamp_ms").limit(1)
+    inserted = first.withColumn("timestamp_ms", (F.col("timestamp_ms") - 60000).cast("long"))
+    steps = [
+        lambda: storage.merge_into(spark, path, inserted, ["ticker", "timestamp_ms"]),
+        lambda: storage.optimize(spark, path, zorder_by="timestamp_ms"),
+        lambda: storage.restore(path, 0),
+    ]
+    for step in steps:
+        step()
+        report, jobs = _jobs_run_by(spark, lambda: storage.health_check(spark, path))
+        assert jobs == []
+        assert report.key_counts == _scan_counts(spark, path, "ticker")
+        assert report.row_count == storage.read_table(spark, path).count()
+
+
+@pytest.mark.parametrize("damage", ["stray", "missing"])
+def test_health_falls_back_to_scan_when_files_disagree(spark, bars, tmp_path_factory, damage):
+    """A parquet file added or removed behind the manifest makes the
+    walked file stats disagree with the recorded ones: health then counts
+    by scanning."""
+    import shutil
+
+    path = str(tmp_path_factory.mktemp("stocks_health_damage") / "stocks")
+    storage.write_partitioned(bars.repartition(4), path)
+    part = storage.snapshot_dirs(path, 0)[0]
+    victim = os.path.join(part, sorted(f for f in os.listdir(part) if f.endswith(".parquet"))[0])
+    if damage == "stray":
+        shutil.copy(victim, os.path.join(part, "stray-copy.parquet"))
+    else:
+        os.remove(victim)
+    report, jobs = _jobs_run_by(spark, lambda: storage.health_check(spark, path))
+    assert jobs, "health trusted stats that disagree with the files"
+    assert report.row_count == storage.read_table(spark, path).count() != bars.count()
+    assert report.key_counts == _scan_counts(spark, path, "ticker")
+
+
+def test_manifest_without_partition_stats(spark, bars, tmp_path_factory):
+    """Entries without partitionStats (older manifests) still health-check
+    by scan, delete by partition without a job, and register."""
+    path = str(tmp_path_factory.mktemp("stocks_nostats") / "stocks")
+    storage.write_partitioned(bars, path)
+    mpath = os.path.join(path, storage.table.MANIFEST)
+    with open(mpath) as f:
+        entries = [json.loads(line) for line in f if line.strip()]
+    with open(mpath, "w") as f:
+        for e in entries:
+            e.pop("partitionStats")
+            f.write(json.dumps(e) + "\n")
+
+    report = storage.health_check(spark, path)
+    assert report.key_counts == _scan_counts(spark, path, "ticker")
+    tick = bars.select("ticker").orderBy("ticker").first()["ticker"]
+    _, jobs = _jobs_run_by(spark, lambda: storage.delete_where(spark, path, f"ticker = '{tick}'"))
+    assert jobs == []
+    assert _metrics(spark, path)[1]["numDeletedRows"] == 180
+    try:
+        assert storage.register_external(spark, "stocks_nostats", path) == "table"
+        assert spark.table("stocks_nostats").count() == bars.count() - 180
+    finally:
+        spark.sql("DROP TABLE IF EXISTS stocks_nostats")
+
+
+def test_clone_carries_schema_and_stats(spark, bars, tmp_path_factory):
+    """A clone's entry carries the source's schema and partition stats:
+    reading it and health-checking it run no job."""
+    root = tmp_path_factory.mktemp("stocks_clone_meta")
+    src, dst = str(root / "src"), str(root / "dst")
+    storage.write_partitioned(bars, src)
+    storage.clone_table(src, dst)
+    df, jobs = _jobs_run_by(spark, lambda: storage.read_table(spark, dst))
+    assert jobs == []
+    assert _fields(df.schema) == _fields(storage.read_table(spark, src).schema)
+    report, jobs = _jobs_run_by(spark, lambda: storage.health_check(spark, dst))
+    assert jobs == []
+    assert report.key_counts == _scan_counts(spark, src, "ticker")
